@@ -7,6 +7,14 @@ style); a ``Catalog`` is the queryable layer table (Repository[OgcSource]
 analog, broadcastable). The request lifecycle mirrors §3.1:
 parse → query AST → catalog filter → tile-key prune → kernel eval →
 style/render.
+
+A GetTile (``get_tile_png``) is served in-process like the reference's
+(GTLayerNode.scala:88-124): prune to the tile key, collect ≤9 tiles per
+raster var with one JVM-only action each, run the fused MAML kernel on
+the driver (maml.eval.eval_tile) and encode the PNG there — no Python
+worker, no shuffle. ``get_tile``/``get_extent``/``render_png`` stay
+DataFrame-producing for batch callers; ``tile_png`` is the one per-tile
+render both paths call.
 """
 
 from __future__ import annotations
@@ -20,7 +28,7 @@ from pyspark.sql import functions as F
 
 from .grids.layout import Extent, ZoomedLayoutScheme
 from .maml import ast as M
-from .maml.eval import crop_to_extent, eval_expr
+from .maml.eval import crop_to_extent, eval_expr, eval_tile
 from .operators import histogram as H
 from .query import ast as Q
 from .query.compile import ogc_layer_predicate
@@ -28,6 +36,19 @@ from .styles import colormap as CM
 from .styles.png import encode_png
 
 SCHEME = ZoomedLayoutScheme()
+
+
+def tile_png(cells, width: int, height: int, style: dict | None = None) -> bytes:
+    """One tile's cells (row-major, NaN = NoData) → styled PNG bytes:
+    the style's colormap when it has ``poles``, else the greyscale
+    auto-rescale."""
+    # np.asarray maps None -> NaN for float64 directly (the NoData
+    # convention everywhere else) — no per-element loop
+    a = np.asarray(cells, dtype=np.float64).reshape(int(height), int(width))
+    poles = (style or {}).get("poles")
+    if poles:
+        return encode_png(CM.interpolated_colormap(a, poles, style.get("clip", CM.CLIP_NONE)))
+    return encode_png(CM.render_rgba(a))
 
 
 _LAYER_GEN = itertools.count()
@@ -97,7 +118,16 @@ class Engine:
     def get_tile_png(self, layer_name: str, z: int, x: int, y: int) -> bytes | None:
         """GetTile + style + PNG encode, memoized on the full request key.
         Returns the PNG bytes of the (z, x, y) tile, or None if the layer
-        has no tile there. The collect is a single request-sized tile.
+        has no tile there.
+
+        A miss runs on the driver: prune every raster var to the tile key,
+        collect its ≤9-tile neighbourhood (the centre alone when no focal
+        op buffers it) with one JVM-only action, evaluate the layer's
+        expression with the fused kernel (maml.eval.eval_tile) and encode
+        the PNG (``tile_png``). The bytes equal
+        ``render_png(get_tile(...))``'s row for the tile; a multiband layer
+        renders its LOWEST band (every var aligned on it when all carry
+        ``band``).
 
         The key carries the Layer's generation stamp (unique per instance,
         never reused — unlike id()), so replacing a layer (``set_layer``
@@ -108,9 +138,11 @@ class Engine:
         key = ("tile_png", layer_name, layer.generation, z, x, y)
 
         def compute() -> bytes | None:
-            styled = self.render_png(self.get_tile(layer_name, z, x, y), layer.style)
-            row = styled.select("png").first()
-            return bytes(row.png) if row else None
+            from .validate import validate_get_tile
+
+            validate_get_tile(z, x, y, scheme=layer.scheme)
+            tile = eval_tile(layer.expression or M.var(layer.name), self._params(layer), z, x, y)
+            return None if tile is None else tile_png(*tile, layer.style)
 
         return self.request_cache.get_or(key, compute)
 
@@ -205,17 +237,24 @@ class Engine:
         sources (e.g. a DEM behind a hillshade) scanned in full, and for
         focal expressions the post-filter cannot push below the halo
         groupBy-applyInPandas."""
-        tiles = layer.tiles
-        if key_filter is not None:
-            tiles = tiles.filter(key_filter)
+        params = self._params(layer, key_filter)
         if layer.expression is None:
-            return tiles
-        params = {
-            n: (df.filter(key_filter) if key_filter is not None else df)
-            for n, df in layer.sources.items()
-        }
-        params.setdefault(layer.name, tiles)
+            return params[layer.name]
         return eval_expr(layer.expression, params)
+
+    @staticmethod
+    def _params(layer: Layer, key_filter=None) -> dict[str, DataFrame]:
+        """The layer's raster vars by name: its sources plus its own tiles
+        under the layer name (a source of that name wins); a layer without
+        an expression reads its tiles only."""
+        def prune(df: DataFrame) -> DataFrame:
+            return df if key_filter is None else df.filter(key_filter)
+
+        if layer.expression is None:
+            return {layer.name: prune(layer.tiles)}
+        params = {n: prune(df) for n, df in layer.sources.items()}
+        params.setdefault(layer.name, prune(layer.tiles))
+        return params
 
     # -- E2/E6: WMTS GetTile / TMS z/x/y -----------------------------------
     def get_tile(self, layer_name: str, z: int, x: int, y: int) -> DataFrame:
@@ -455,20 +494,8 @@ class Engine:
         import pandas as pd
         from pyspark.sql import types as T
 
-        poles = (style or {}).get("poles")
-        clip = (style or {}).get("clip", CM.CLIP_NONE)
-
         @F.pandas_udf(T.BinaryType())
         def to_png(cells, w_s, h_s):
-            out = []
-            for c, w, h in zip(cells, w_s, h_s):
-                # np.asarray maps None -> NaN for float64 directly (the
-                # NoData convention everywhere else) — no per-element loop
-                a = np.asarray(c, dtype=np.float64).reshape(h, w)
-                rgba = (
-                    CM.interpolated_colormap(a, poles, clip) if poles else CM.render_rgba(a)
-                )
-                out.append(encode_png(rgba))
-            return pd.Series(out)
+            return pd.Series([tile_png(c, w, h, style) for c, w, h in zip(cells, w_s, h_s)])
 
         return tiles.withColumn("png", to_png("cells", "width", "height"))

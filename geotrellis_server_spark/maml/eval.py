@@ -10,6 +10,9 @@ LayerTms analog (core/.../LayerExtent.scala:46-66, LayerTms.scala:50-80).
   padded via the halo join (operators/focal.py — the reference's 3×3
   neighborhood read, GTLayerNode.scala:88-130) and the kernel consumes the
   pad.
+- ``eval_tile``: one output tile evaluated on the driver from collected
+  ≤9-tile neighbourhoods — the request path; the DataFrame paths above
+  are its equality witness in the tests.
 
 Tile DataFrame contract: columns (zoom, tile_x, tile_y, width, height,
 cells: array<double>); NaN = NoData.
@@ -53,35 +56,42 @@ def eval_expr(expr: Expr, params: dict[str, DataFrame], tile_size: int | None = 
     return eval_local(expr, params)
 
 
-def _bind_geom_masks(expr: Expr, params: dict[str, DataFrame]):
+def _geom_mask_vars(expr: Expr, bound) -> tuple[Expr, dict[str, tuple[str, tuple]]]:
     """Rewrite ``mask(x, geomLit)`` → ``mask(x, rasterV(__geom_mask_N))``
-    with a rasterized mask-tile table (geometry/rasterize.py) bound under
-    the synthetic name. The mask grid is derived from the first bound var
-    inside x (all vars share the tile key space — J4 alignment)."""
-    from ..geometry.rasterize import ring_mask_tiles
-
-    params = dict(params)
-    counter = [0]
+    and return {synthetic name: (grid var, ring)}. The mask grid is the
+    first bound var inside x (all vars share the tile key space — J4
+    alignment); the mask tile exists wherever that var has a tile."""
+    masks: dict[str, tuple[str, tuple]] = {}
 
     def f(e: Expr) -> Expr:
         if e.symbol == "mask" and len(e.args) == 2 and e.args[1].symbol == "geomLit":
-            sub_vars = sorted(n for n in e.args[0].var_names() if n in params)
+            sub_vars = sorted(n for n in e.args[0].var_names() if n in bound)
             if not sub_vars:
                 raise ValueError(
                     "mask-by-geometry needs at least one bound raster var in "
                     "the masked expression to define the tile grid"
                 )
-            name = f"__geom_mask_{counter[0]}"
-            counter[0] += 1
-            params[name] = ring_mask_tiles(params[sub_vars[0]], e.args[1].p("ring"))
+            name = f"__geom_mask_{len(masks)}"
+            masks[name] = (sub_vars[0], e.args[1].p("ring"))
             return Expr("mask", (e.args[0], Expr.var(name)))
         return e
 
-    return expr.transform(f), params
+    return expr.transform(f), masks
 
 
-def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
-    names = sorted(expr.var_names())
+def _bind_geom_masks(expr: Expr, params: dict[str, DataFrame]):
+    """``_geom_mask_vars`` with each mask bound to a rasterized mask-tile
+    table (geometry/rasterize.py) under its synthetic name."""
+    from ..geometry.rasterize import ring_mask_tiles
+
+    expr, masks = _geom_mask_vars(expr, params)
+    params = dict(params)
+    for name, (grid, ring) in masks.items():
+        params[name] = ring_mask_tiles(params[grid], ring)
+    return expr, params
+
+
+def _check_bound(names: list[str], bound) -> None:
     if not names:
         # constant expression (e.g. fully folded scalar): there is no tile
         # grid to broadcast it over — reference MAML likewise needs at
@@ -90,9 +100,14 @@ def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
             "MAML expression has no raster vars after constant folding; "
             "bind at least one raster var to define the output tile grid"
         )
-    missing = [n for n in names if n not in params]
+    missing = [n for n in names if n not in bound]
     if missing:
         raise KeyError(f"unbound MAML vars: {missing}")
+
+
+def eval_local(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
+    names = sorted(expr.var_names())
+    _check_bound(names, params)
     kernel = compile_node(expr)
 
     # band participates in the alignment key when every input is
@@ -234,6 +249,132 @@ def eval_focal(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
         "height",
         apply_kernel(F.col("width"), F.col("height"), *kernel_cols).alias("cells"),
     )
+
+
+def eval_tile(expr: Expr, params: dict[str, DataFrame], z: int, x: int, y: int):
+    """``eval_expr(expr, params)`` restricted to the ONE tile (z, x, y) and
+    evaluated on the driver — the request path (Engine.get_tile_png).
+
+    Each source table is read with one JVM-only collect: the centre tile
+    for a var no focal op buffers, the ≤9 tiles of x±1 × y±1 for a
+    buffered one. The same compiled kernel then runs on the env
+    conventions of the UDFs above:
+
+    - local: (1, npix) rows with ``__rowwise__``, plus ``__keys__`` for a
+      geomLit (eval_local);
+    - focal: each var as a (h+2b, w+2b) block cut from the 3×3 mosaic of
+      its neighbourhood, NaN where a neighbour is missing (eval_focal);
+      a ``mask(x, geomLit)`` is a mask var rasterized per tile its grid
+      var has, as ``_bind_geom_masks`` binds it.
+
+    Band: when every var carries ``band`` they align on it, as the eval_*
+    join keys do, and the tile is the LOWEST band every var has at the
+    centre; otherwise each banded var contributes its own lowest centre
+    band.
+
+    Returns (cells (h*w,) float64, width, height), or None when some var
+    has no tile at (z, x, y) (the DataFrame path's inner join is empty).
+    Raises ValueError when a tile of the neighbourhood is not the centre
+    tile's width × height, or a focal buffer exceeds min(width, height):
+    the 3×3 read supplies one ring of neighbour tiles."""
+    from ..geometry.rasterize import ring_mask_block
+
+    expr = fold_constants(expr)
+    focal = _has_focal(expr)
+    masks: dict[str, tuple[str, tuple]] = {}
+    if focal:
+        expr, masks = _geom_mask_vars(expr, params)
+    names = sorted(expr.var_names())
+    _check_bound(names, set(params) | set(masks))
+    bufs = expr.vars_with_buffer() if focal else {}
+    buf_of = {n: int(bufs.get(n, 0)) for n in names}
+    src = {n: masks[n][0] if n in masks else n for n in names}
+    rings = {n: [tuple(map(float, p)) for p in ring] for n, (_, ring) in masks.items()}
+    reach: dict[str, int] = {}  # 1: the var's 3x3 neighbourhood, 0: its centre tile
+    for n in names:
+        reach[src[n]] = max(reach.get(src[n], 0), int(buf_of[n] > 0))
+
+    # {source: {band: {(dx, dy): (width, height, cells)}}}, band None if unbanded
+    banded, by_band = {}, {}
+    for s, r in reach.items():
+        df = params[s]
+        banded[s] = "band" in df.columns
+        got = (
+            df.filter((F.col("zoom") == z)
+                      & F.col("tile_x").between(x - r, x + r)
+                      & F.col("tile_y").between(y - r, y + r))
+            .select("tile_x", "tile_y", *(["band"] if banded[s] else []),
+                    "width", "height", "cells")
+            .toArrow()  # Arrow batches straight from the JVM: no Row objects
+        )
+        col = {c: got.column(c).to_pylist() for c in got.column_names if c != "cells"}
+        bands = col["band"] if banded[s] else [None] * got.num_rows
+        cells = got.column("cells")
+        by_band[s] = {}
+        for i, b in enumerate(bands):
+            by_band[s].setdefault(b, {})[(col["tile_x"][i] - x, col["tile_y"][i] - y)] = (
+                col["width"][i], col["height"][i], cells[i].values)
+
+    centre = {s: {b for b, ts in g.items() if (0, 0) in ts} for s, g in by_band.items()}
+    if all(banded.values()):
+        common = set.intersection(*centre.values())
+        if not common:
+            return None
+        band = dict.fromkeys(by_band, min(common))
+    elif all(centre.values()):
+        band = {s: min(c) if banded[s] else None for s, c in centre.items()}
+    else:
+        return None
+    tiles = {s: by_band[s][band[s]] for s in by_band}
+
+    w, h, _ = tiles[src[names[0]]][(0, 0)]
+    for s, ts in tiles.items():
+        for (dx, dy), (tw, th, _) in ts.items():
+            if (tw, th) != (w, h):
+                raise ValueError(
+                    f"tile ({z}, {x + dx}, {y + dy}) of var {s!r} is "
+                    f"{tw}x{th}; the centre tile is {w}x{h}"
+                )
+    if max(buf_of.values()) > min(w, h):
+        raise ValueError(
+            f"focal buffer {max(buf_of.values())} exceeds min(width, height) = "
+            f"{min(w, h)}: the 3x3 neighbourhood supplies one ring of tiles"
+        )
+
+    def block(n: str, dx: int, dy: int) -> np.ndarray | None:
+        t = tiles[src[n]].get((dx, dy))
+        if t is None:
+            return None
+        if n in masks:
+            return ring_mask_block(rings[n], z, x + dx, y + dy, w, h)
+        # a writable copy; NULL cells come out as NaN, the NoData convention
+        return np.array(t[2].to_numpy(zero_copy_only=False), dtype=np.float64).reshape(h, w)
+
+    kernel = compile_node(expr)
+    if not focal:
+        env = {n: block(n, 0, 0).reshape(1, w * h) for n in names}
+        env["__rowwise__"] = True
+        if _has_geom(expr):
+            env["__keys__"] = tuple(np.array([v]) for v in (z, x, y, w, h))
+        out = kernel(env)
+        out = np.broadcast_to(out, (1, w * h)) if np.isscalar(out) else out
+        return np.asarray(out, dtype=np.float64)[0], w, h
+
+    env = {"__pad__": buf_of}
+    for n in names:
+        b = buf_of[n]
+        if b == 0:
+            env[n] = block(n, 0, 0)
+            continue
+        mosaic = np.full((3 * h, 3 * w), np.nan)
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
+                c = block(n, dx, dy)
+                if c is not None:
+                    mosaic[(dy + 1) * h:(dy + 2) * h, (dx + 1) * w:(dx + 2) * w] = c
+        # a contiguous copy: the same memory layout eval_focal's blocks have
+        env[n] = mosaic[h - b:2 * h + b, w - b:2 * w + b].copy()
+    return np.asarray(kernel(env), dtype=np.float64).ravel(), w, h
 
 
 def crop_to_extent(

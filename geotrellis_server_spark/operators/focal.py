@@ -18,7 +18,8 @@ partitioned/bucketed, or cached pre-partitioned — the join reuses the
 partitioning, so the bodies don't move at all; measured q9 3.64→3.14 s
 at sf0.1/32c). Groups stay bounded (≤8 strip rows) so there is NO skew
 regardless of data distribution; AQE coalesces the small partitions. Requires radius ≤ min(width, height)
-(same single-ring assumption as the reference's 3×3 read). Expressions
+(same single-ring assumption as the reference's 3×3 read; the request
+path, maml.eval.eval_tile, raises ValueError beyond it). Expressions
 without focal ops never enter this path (Vars.varsWithBuffer gating,
 LayerTms.scala:66).
 """

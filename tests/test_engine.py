@@ -1,8 +1,11 @@
 """Engine service surface (E1–E6) + resumable job (M9) end-to-end."""
 
+from functools import reduce
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from geotrellis_server_spark.engine import Engine, Layer
 from geotrellis_server_spark.maml import ast as M
@@ -273,3 +276,144 @@ def test_legend_png_rendering(spark):
     leg = by_name["styled"]["legend"]
     assert leg["format"] == "image/png" and leg["online_resource"].endswith(
         "styled.png")
+
+
+# -- request path: get_tile_png on the driver vs the DataFrame witness ------
+
+TILE_DDL = ("zoom INT, tile_x BIGINT, tile_y BIGINT, band INT, width INT, "
+            "height INT, cells ARRAY<DOUBLE>")
+ABSENT = {(1, 2), (2, 1), (3, 3)}  # holes in the z2 grid: sparse neighbourhoods
+# world corner, world edge, interior, interior beside two holes, a hole
+WITNESS_KEYS = [(2, 0, 0), (2, 3, 0), (2, 1, 1), (2, 2, 2), (2, 3, 3)]
+RING = [(-100.0, -30.0), (60.0, -40.0), (70.0, 50.0), (-90.0, 45.0)]
+
+
+def _tiles(spark, keys, seed, w=8, h=8, band=0):
+    """Random 0-8 counts with NoData holes, both NaN and NULL."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for z, x, y in keys:
+        c = rng.integers(0, 9, w * h).astype(float)
+        hole = rng.random(w * h) < 0.2
+        cells = [None if hole[i] and i % 2 else float("nan") if hole[i] else v
+                 for i, v in enumerate(c.tolist())]
+        rows.append((z, x, y, band, w, h, cells))
+    return spark.createDataFrame(rows, TILE_DDL)
+
+
+def _grid(skip=frozenset()):
+    return [(2, x, y) for x in range(4) for y in range(4) if (x, y) not in skip]
+
+
+@pytest.fixture(scope="module")
+def witness_engine(spark):
+    t = _tiles(spark, _grid(ABSENT), seed=7).coalesce(1).cache()
+    u = _tiles(spark, _grid({(0, 0), (2, 3)}), seed=8).coalesce(1).cache()
+    layers = {
+        "plain": Layer("plain", t),
+        "density2x": Layer("density2x", t, expression=M.var("density2x") * 2.0),
+        "two_var": Layer("two_var", t, sources={"a": t, "b": u},
+                         expression=M.focal("fmean", M.var("a"), radius=1) + M.var("b") * 0.5),
+        "rescale": Layer("rescale", t, expression=M.rescale(M.var("rescale"), 0.0, 100.0)),
+        "styled": Layer("styled", t, style={
+            "poles": {1.0: (0, 0, 255, 255), 6.0: (255, 0, 0, 255)}, "clip": "clip-both"}),
+        "geom_local": Layer("geom_local", t, expression=M.mask(M.var("geom_local"), M.geom(RING))),
+        "geom_focal": Layer("geom_focal", t, expression=M.focal(
+            "fsum", M.mask(M.var("geom_focal"), M.geom(RING)), radius=1)),
+    }
+    for op in ("fmean", "fmax", "fmedian"):
+        for r in (1, 2):
+            name = f"{op}_r{r}"
+            layers[name] = Layer(name, t, expression=M.focal(op, M.var(name), radius=r))
+    return Engine(spark, layers)
+
+
+WITNESS_LAYERS = ["plain", "density2x", "two_var", "rescale", "styled", "geom_local",
+                  "geom_focal", "fmean_r1", "fmean_r2", "fmax_r1", "fmax_r2",
+                  "fmedian_r1", "fmedian_r2"]
+
+
+def _witness_pngs(eng, name, keys):
+    """render_png(get_tile(...)) per key — the DataFrame path, one job."""
+    tiles = reduce(DataFrame.unionByName, [eng.get_tile(name, *k) for k in keys])
+    rows = eng.render_png(tiles, eng.layers[name].style).collect()
+    got = {(r.zoom, r.tile_x, r.tile_y): bytes(r.png) for r in rows}
+    return {k: got.get(k) for k in keys}
+
+
+@pytest.mark.parametrize("name", WITNESS_LAYERS)
+def test_get_tile_png_equals_dataframe_witness(witness_engine, name):
+    eng = witness_engine
+    want = _witness_pngs(eng, name, WITNESS_KEYS)
+    got = {k: eng.get_tile_png(name, *k) for k in WITNESS_KEYS}
+    assert got == want
+    assert got[(2, 3, 3)] is None and got[(2, 2, 2)] is not None
+
+
+def test_get_tile_png_builds_no_python_udf(witness_engine, monkeypatch):
+    """The request path is JVM collects + driver numpy: no pandas UDF is
+    planned and render_png (the DataFrame render) is not called."""
+    eng = witness_engine
+    want = {n: eng.get_tile_png(n, 2, 2, 2) for n in ("plain", "two_var", "geom_focal")}
+
+    def boom(*a, **k):
+        raise AssertionError("Python UDF on the request path")
+
+    monkeypatch.setattr(Engine, "render_png", boom)
+    monkeypatch.setattr("pyspark.sql.functions.pandas_udf", boom)
+    eng.request_cache.invalidate()
+    for n, png in want.items():
+        assert eng.get_tile_png(n, 2, 2, 2) == png
+    assert eng.get_tile_png("fmedian_r2", 2, 0, 0) is not None
+    assert eng.get_tile_png("geom_local", 2, 3, 3) is None
+
+
+def test_get_tile_png_renders_lowest_band(spark):
+    """A multiband tile renders its lowest band — band 1 rows come first in
+    the table, so "whichever row comes back first" would pick band 1 — and
+    vars align on the lowest band they ALL have at the centre."""
+    keys = _grid()
+    b1 = _tiles(spark, keys, seed=1, band=1)
+    b0 = _tiles(spark, keys, seed=2, band=0)
+    two = b1.unionByName(b0).coalesce(1).cache()
+    b2 = _tiles(spark, keys, seed=3, band=2)
+    other = b1.unionByName(b2).coalesce(1).cache()  # bands {1, 2}
+    eng = Engine(spark, {
+        "two": Layer("two", two),
+        "f": Layer("f", two, expression=M.focal("fmean", M.var("f"), radius=1)),
+        "pair": Layer("pair", two, sources={"a": two, "b": other},
+                      expression=M.focal("fmax", M.var("a"), radius=1) - M.var("b")),
+    })
+
+    def witness(name, band):
+        rows = eng.render_png(eng.get_tile(name, 2, 1, 2).filter(F.col("band") == band),
+                              None).collect()
+        return bytes(rows[0].png)
+
+    assert eng.get_tile_png("two", 2, 1, 2) == witness("two", 0) != witness("two", 1)
+    assert eng.get_tile_png("f", 2, 1, 2) == witness("f", 0)
+    assert eng.get_tile_png("pair", 2, 1, 2) == witness("pair", 1)
+
+
+def test_get_tile_png_rejects_mismatched_neighbour(spark):
+    centre = _tiles(spark, [(2, 1, 1)], seed=4)
+    east = _tiles(spark, [(2, 2, 1)], seed=5, w=4, h=4)
+    t = centre.unionByName(east)
+    eng = Engine(spark, {
+        "f": Layer("f", t, expression=M.focal("fmean", M.var("f"), radius=1))})
+    with pytest.raises(ValueError, match="is 4x4; the centre tile is 8x8"):
+        eng.get_tile_png("f", 2, 1, 1)
+
+
+def test_get_tile_png_rejects_buffer_beyond_one_ring(spark):
+    t = _tiles(spark, _grid(), seed=6, w=2, h=3)
+    eng = Engine(spark, {
+        "ok": Layer("ok", t, expression=M.focal("fmax", M.var("ok"), radius=2)),
+        "f": Layer("f", t, expression=M.focal("fmax", M.var("f"), radius=3)),
+        "nested": Layer("nested", t, expression=M.focal(
+            "fmean", M.focal("fmean", M.var("nested"), radius=2), radius=1)),
+    })
+    assert eng.get_tile_png("ok", 2, 1, 1) is not None
+    for name in ("f", "nested"):
+        with pytest.raises(ValueError, match="exceeds min\\(width, height\\) = 2"):
+            eng.get_tile_png(name, 2, 1, 1)

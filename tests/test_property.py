@@ -1,6 +1,8 @@
-"""Property-based tests (hypothesis) — pure-python kernels only (no Spark
+"""Property-based tests (hypothesis) — pure-python kernels (no Spark
 session per example): tile-key math, ray-cast PIP vs half-plane oracle on
-random convex polygons, colormap monotonicity, extent folds, validation.
+random convex polygons, colormap monotonicity, extent folds, validation;
+plus the driver-side GetTile render against its DataFrame witness on the
+shared test session.
 """
 
 import math
@@ -8,7 +10,9 @@ import math
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from geotrellis_server_spark.engine import Engine, Layer
 from geotrellis_server_spark.geometry.pip import points_in_ring
 from geotrellis_server_spark.grids import cells as C
 from geotrellis_server_spark.grids.layout import (
@@ -17,6 +21,7 @@ from geotrellis_server_spark.grids.layout import (
     lonlat_to_mercator,
     tile_key_np,
 )
+from geotrellis_server_spark.maml import ast as M
 from geotrellis_server_spark.styles.colormap import interpolated_colormap
 from geotrellis_server_spark.validate import RequestValidationError, validate_get_tile
 
@@ -196,3 +201,44 @@ def test_jpeg_roundtrip_psnr_property(channels_sel, h, w, quality, seed):
     mse = np.mean((out.astype(np.float64) - img.astype(np.float64)) ** 2)
     psnr = 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
     assert psnr > 20.0, (h, w, quality, psnr)  # q40 on noisy content ~21.6
+
+
+SERVE_EXPRS = {
+    "plain": None,
+    "local": lambda v: M.var(v) * 2.0 - 1.0,
+    "fmean_r1": lambda v: M.focal("fmean", M.var(v), radius=1),
+    "fmax_r2": lambda v: M.focal("fmax", M.var(v), radius=2),
+    "fmedian_r1": lambda v: M.focal("fmedian", M.var(v), radius=1),
+    "rescale": lambda v: M.rescale(M.var(v), 0.0, 10.0),
+    "two_var": lambda v: M.focal("fsum", M.var("a"), radius=1) / M.var("b"),
+}
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.sampled_from(sorted(SERVE_EXPRS)),
+       st.integers(min_value=2, max_value=5), st.integers(min_value=2, max_value=5),
+       st.sets(st.tuples(st.integers(0, 3), st.integers(0, 3)), min_size=1, max_size=16),
+       st.tuples(st.integers(0, 3), st.integers(0, 3)),
+       st.integers(min_value=0, max_value=10**6))
+def test_get_tile_png_equals_dataframe_witness(spark, kind, w, h, present, key, seed):
+    """Random tile sizes, sparse z2 grids (world edges included), NaN and
+    NULL holes, absent keys: the driver path's PNG is the bytes the
+    DataFrame path renders for the key, or None where it has no row."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for x, y in sorted(present):
+        c = rng.integers(0, 5, w * h).astype(float)
+        hole = rng.random(w * h) < 0.25
+        rows.append((2, x, y, 0, w, h, [None if hole[i] and i % 2 else
+                                        float("nan") if hole[i] else v
+                                        for i, v in enumerate(c.tolist())]))
+    tiles = spark.createDataFrame(rows, "zoom INT, tile_x BIGINT, tile_y BIGINT, "
+                                        "band INT, width INT, height INT, cells ARRAY<DOUBLE>")
+    make = SERVE_EXPRS[kind]
+    # b: the same keys minus one, so the two-var inner join can be empty
+    b = tiles.filter(~((F.col("tile_x") == key[0]) & (F.col("tile_y") == 0)))
+    layer = Layer("v", tiles, expression=make("v") if make else None,
+                  sources={"a": tiles, "b": b} if kind == "two_var" else {})
+    eng = Engine(spark, {"v": layer})
+    want = eng.render_png(eng.get_tile("v", 2, *key)).collect()
+    assert eng.get_tile_png("v", 2, *key) == (bytes(want[0].png) if want else None)
