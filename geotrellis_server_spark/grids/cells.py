@@ -66,50 +66,8 @@ def grid_disk(cell: int, res: int, k: int) -> list[int]:
     return out
 
 
-def grid_ring(cell: int, res: int, k: int) -> list[int]:
-    """Hollow ring at exactly Chebyshev distance k."""
-    if k == 0:
-        return [cell]
-    n = 1 << res
-    cx, cy = cell_xy(cell, res)
-    out = []
-    for dx in range(-k, k + 1):
-        x = cx + dx
-        if x < 0 or x >= n:
-            continue
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            y = cy + dy
-            if 0 <= y < n:
-                out.append(x * n + y)
-    return out
-
-
 # --- Spark column builders (delegate to sqlgen so oracle SQL matches) ------
 
 
 def cell_key_col(lon_col: str, lat_col: str, res: int) -> Column:
     return F.expr(sqlgen.cell_key_sql(lon_col, lat_col, res))
-
-
-def tile_x_col(lon_col: str, zoom: int) -> Column:
-    return F.expr(sqlgen.tile_x_sql(lon_col, zoom))
-
-
-def tile_y_col(lat_col: str, zoom: int) -> Column:
-    return F.expr(sqlgen.tile_y_sql(lat_col, zoom))
-
-
-def cell_bounds(cell: int, res: int) -> tuple[float, float, float, float]:
-    """Cell → (lon_min, lat_min, lon_max, lat_max) in EPSG:4326."""
-    from .layout import mercator_to_lonlat, WEBMERCATOR_BOUND
-
-    n = 1 << res
-    cx, cy = cell_xy(cell, res)
-    w = 2.0 * WEBMERCATOR_BOUND / n
-    x0 = -WEBMERCATOR_BOUND + cx * w
-    y1 = WEBMERCATOR_BOUND - cy * w
-    lon0, lat0 = mercator_to_lonlat(np.array([x0]), np.array([y1 - w]))
-    lon1, lat1 = mercator_to_lonlat(np.array([x0 + w]), np.array([y1]))
-    return float(lon0[0]), float(lat0[0]), float(lon1[0]), float(lat1[0])

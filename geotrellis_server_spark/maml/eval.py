@@ -42,7 +42,7 @@ def _has_geom(e: Expr) -> bool:
     return e.symbol == "geomLit" or any(_has_geom(a) for a in e.args)
 
 
-def eval_expr(expr: Expr, params: dict[str, DataFrame], tile_size: int | None = None) -> DataFrame:
+def eval_expr(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     """Dispatch: local-only → joined batch kernel; focal → halo path.
 
     mask-by-geometry: in the LOCAL path the geometry rasterizes inside
@@ -176,8 +176,8 @@ def eval_focal(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
     # per-var column layout in the kernel UDF: 1 column (cells) for an
     # unbuffered var, 9 columns (body + 8 raw strips) for a buffered one.
     # Halo-padded blocks are assembled with numpy BLOCK ASSIGNMENT inside
-    # the UDF we were already paying for — the JVM concat/slice build of
-    # cells_padded was ~60% of the halo step's cost, and NULL strips
+    # the UDF we were already paying for — a JVM concat/slice build of
+    # the padded array was ~60% of the halo step's cost, and NULL strips
     # become NaN pads for free.
     dfs, var_ncols = [], []
     for i, n in enumerate(names):
@@ -188,7 +188,7 @@ def eval_focal(expr: Expr, params: dict[str, DataFrame]) -> DataFrame:
                 *([F.col("width"), F.col("height")] if i == 0 else []))
             var_ncols.append(1)
         else:
-            raw = with_halo(params[n], b, assembled=False)
+            raw = with_halo(params[n], b)
             picked = raw.select(
                 *key, F.col("s_c").alias(f"__c_{n}"),
                 *[F.col(s).alias(f"__{n}_{s}") for s in STRIP_COLS],

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from .. import sqlgen
 from ..grids import cells as C
 from ..grids.layout import mercator_to_lonlat, WEBMERCATOR_BOUND
+from ..validate import validate_knn
 
 DEFAULT_RES = 4  # fallback floor; callers get density-proportional auto_res
 
@@ -246,9 +247,12 @@ def knn_join(
     rank) with exactly min(k, |docs in world|) rows per query.
     ``res=None`` → density-proportional :func:`auto_res` (same contract
     as knn_join_bulk, including the one-pass ``initial_ring=2``
-    default — each ring iteration is a full corpus pass here too)."""
+    default — each ring iteration is a full corpus pass here too).
+    A bad ``k`` or query raises ``RequestValidationError`` before any
+    Spark job."""
     import numpy as np
 
+    validate_knn(k, queries)
     spark = docs.sparkSession
     if res is None:
         res = auto_res(docs.count())

@@ -68,31 +68,24 @@ def pip_join_rect(
     lon: str = "lon",
     lat: str = "lat",
     res: int = DEFAULT_PREFILTER_RES,
-    half_open: bool = True,
     zone_cells: DataFrame | None = None,
 ) -> DataFrame:
-    """Points × rectangular zones. ``half_open=True`` uses
-    [xmin,xmax)×[ymin,ymax) so a tiling grid partitions points uniquely;
-    ``False`` uses covers semantics (boundary inclusive, both edges)."""
+    """Points × rectangular zones, half-open: a point joins a zone when
+    it lies in [xmin, xmax) × [ymin, ymax), so a tiling grid of zones
+    partitions the points uniquely (a point on a shared edge belongs to
+    the zone east / north of it). ``zone_cells`` is a prebuilt
+    ``build_rect_zone_cells(zones, res)`` cover."""
     # bounds ride along in the broadcast cell-cover table → ONE broadcast
     # hash join total, big side untouched
     zc = zone_cells if zone_cells is not None else build_rect_zone_cells(zones, res)
     pts = points.withColumn("cell", C.cell_key_col(lon, lat, res))
     cand = pts.join(F.broadcast(zc), "cell", "inner")
-    if half_open:
-        pred = (
-            (F.col(lon) >= F.col("xmin"))
-            & (F.col(lon) < F.col("xmax"))
-            & (F.col(lat) >= F.col("ymin"))
-            & (F.col(lat) < F.col("ymax"))
-        )
-    else:
-        pred = (
-            (F.col(lon) >= F.col("xmin"))
-            & (F.col(lon) <= F.col("xmax"))
-            & (F.col(lat) >= F.col("ymin"))
-            & (F.col(lat) <= F.col("ymax"))
-        )
+    pred = (
+        (F.col(lon) >= F.col("xmin"))
+        & (F.col(lon) < F.col("xmax"))
+        & (F.col(lat) >= F.col("ymin"))
+        & (F.col(lat) < F.col("ymax"))
+    )
     return cand.filter(pred).drop("cell", "xmin", "ymin", "xmax", "ymax")
 
 

@@ -177,92 +177,65 @@ def rasterize_count_layout(
     return _densify_tiles(per_pixel, zoom, ts)
 
 
-def pyramid_up(
-    tiles: DataFrame, agg: str = "sum", fill: float = 0.0,
-    impl: str = "arrow",
-) -> DataFrame:
+# Arrow ``list`` offsets are int32: one list column of a batch holds
+# fewer than 2^31 values.
+_MAX_LIST_VALUES = (1 << 31) - 1
+
+
+def pyramid_up(tiles: DataFrame, agg: str = "sum", fill: float = 0.0) -> DataFrame:
     """Pyramid rollup: build zoom z-1 tiles from zoom z by 2×2 pixel
     aggregation — GeoTrellis ``Pyramid.up`` (spark/.../pyramid/
-    Pyramid.scala). Two implementations, bit-identical (tests assert
-    equality):
+    Pyramid.scala). Two Arrow kernels around ONE shuffle on the parent key:
 
-    - ``impl="arrow"`` (default): the per-cell work (2×2 downsample,
-      quadrant assembly) runs as numpy slices inside two mapInPandas
-      kernels around the one parent-key shuffle. Spark's higher-order
-      array functions (transform/slice/flatten) never enter whole-stage
-      codegen — they run on the interpreted expression evaluator, whose
-      JIT-compiled speed depends on which OTHER queries ran first in
-      the session (measured: the same pyramid query runs 0.8 s with a
-      clean profile and a persistent 2-5 s when the interpreter's call
-      sites were first compiled against a session that had run other
-      HOF-heavy operators — every suite run, in practice). numpy is
-      immune to that hazard and equally fast on the clean profile.
-    - ``impl="sql"``: the original pure-SQL form below (also the shape
-      the oracle mirrors), kept as the equality witness.
+    1. a ``mapInArrow`` kernel downsamples each child tile to a
+       quarter-size quadrant with numpy slices, ``agg`` = 'sum' (counts:
+       parent pixel = sum of its 4 children, so rolling up a density
+       raster EQUALS rasterizing at z-1 directly — the oracle contract) |
+       'mean' (continuous data — the GDAL-average overview recipe) |
+       'max'. sum/mean accumulate ((TL + TR) + BL) + BR element-wise and
+       max is NaN-propagating (Spark ``greatest`` order), so the doubles
+       are bit-identical to the SQL form the tests keep as a witness;
+    2. the 4 quadrants group to the parent key with the any_value(when())
+       pivot of the focal halo (operators/focal.py) — the natural
+       partitioning for writing the next level — and a second
+       ``mapInArrow`` kernel assembles the parent by block assignment.
 
-    The SQL formulation:
-
-    1. each child tile downsamples to a quarter-size quadrant
-       (``transform(sequence)`` + O(1) array indexing — JVM-side), with
-       ``agg`` = 'sum' (counts: parent pixel = sum of its 4 children,
-       so rolling up a density raster EQUALS rasterizing at z-1
-       directly — the oracle contract) | 'mean' (continuous data — the
-       GDAL-average overview recipe) | 'max',
-    2. the 4 quadrants group to the parent key and assemble via the
-       same any_value(when())-pivot + slice/concat idiom as the focal
-       halo assembly (operators/focal.py) — one shuffle on the parent
-       key, the natural partitioning for writing the next level.
+    Why not Spark's higher-order array functions (transform/slice/
+    flatten): they never enter whole-stage codegen and run on the
+    interpreted expression evaluator, whose JIT-compiled speed depends
+    on which OTHER queries ran first in the session (measured: the same
+    pyramid query ran 0.8 s with a clean profile and a persistent 2-5 s
+    after other HOF-heavy operators — every suite run, in practice).
+    numpy is immune to that hazard and equally fast on the clean profile.
 
     Missing children fill with ``fill`` (0 for count layers; NaN keeps
-    NoData for continuous layers). Input tiles must share one (zoom,
-    width, height); output halves the zoom's tile count, same tile size.
-    Iterating z..1 materializes the whole pyramid in log2 rounds, each
-    a narrow shuffle of quarter-size quadrants (¼ the naive volume of
-    re-keying raw points per level)."""
+    NoData for continuous layers). Parent keys use floor division, so
+    negative tile coordinates (custom-CRS layouts) roll up correctly.
+    Every input tile must share one even (width, height) and carry a
+    non-NULL ``cells`` of width·height values; anything else raises
+    ValueError. Output (zoom, tile_x, tile_y, width, height, cells): zoom,
+    width and height keep their input types, the keys are bigint; one
+    tile of the same size per parent key. Iterating z..1 materializes
+    the whole pyramid in log2 rounds, each a narrow shuffle of
+    quarter-size quadrants (¼ the naive volume of re-keying raw points
+    per level)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if agg not in ("sum", "mean", "max"):
         raise ValueError("agg must be one of ['max', 'mean', 'sum']")
-    if impl == "arrow":
-        return _pyramid_up_arrow(tiles, agg, fill)
-    return _pyramid_up_sql(tiles, agg, fill)
-
-
-def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
-    """numpy-kernel pyramid_up. FP-order parity with the SQL form:
-    sum/mean accumulate ((TL + TR) + BL) + BR element-wise — the same
-    left-to-right order as the SQL ``a + b + c + d`` — and max uses
-    np.maximum (NaN-propagating, matching Spark ``greatest`` where NaN
-    compares greater than every value), so doubles are bit-identical."""
-    import pyarrow as pa
-
-    sql_schema = _pyramid_up_sql(tiles, agg, fill).schema  # analysis only
-
-    def _list_rows(col):
-        """(null_mask, offsets, flat float64 values) of a list column.
-        Built from the raw buffers so NaN elements stay NaN (pandas
-        round-trips would coerce them to null)."""
-        mask = np.asarray(col.is_null())
-        offs = np.asarray(col.offsets)
-        vals = np.asarray(col.values, dtype=np.float64)
-        return mask, offs, vals
-
-    def _list_col(arr2d):
-        """numpy (n, k) float64 -> pa list<double> rows, NaN-preserving."""
-        n, k = arr2d.shape
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * k),
-            pa.array(arr2d.reshape(-1), type=pa.float64()))
+    limit = _MAX_LIST_VALUES  # bound read on the driver, shipped to the kernels
 
     def down_kernel(batches):
         for b in batches:
             n = b.num_rows
             if not n:
                 continue
-            w = b.column("width")[0].as_py()
-            h = b.column("height")[0].as_py()
-            if w % 2 or h % 2:
-                raise ValueError("pyramid_up requires even tile size")
-            _, _, vals = _list_rows(b.column("cells"))
-            cells = vals.reshape(n, h, w)
+            w, h = _tile_size(b.column("width"), b.column("height"))
+            valid, cells = _list_rows(b.column("cells"), h * w)
+            if not valid.all():
+                raise ValueError("pyramid_up: NULL cells row")
+            cells = cells.reshape(n, h, w)
             a = cells[:, 0::2, 0::2]
             bb = cells[:, 0::2, 1::2]
             c = cells[:, 1::2, 0::2]
@@ -283,7 +256,7 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
                  pa.array(np.mod(ty, 2).astype(np.int32)),
                  pa.array(np.full(n, w, np.int32)),
                  pa.array(np.full(n, h, np.int32)),
-                 _list_col(q.reshape(n, -1))],
+                 _list_col(q.reshape(n, -1), limit)],
                 names=["zoom", "tile_x", "tile_y", "qx", "qy",
                        "width", "height", "qcells"])
 
@@ -311,128 +284,102 @@ def _pyramid_up_arrow(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
             F.when((F.col("qx") == qx) & (F.col("qy") == qy),
                    F.col("qcells")), True).alias(f"q_{qx}{qy}")
 
+    # min AND max of the child sizes: children of one parent may come
+    # from different batches, so only the group sees a size mix
     per_parent = quads.groupBy("zoom", "tile_x", "tile_y").agg(
         pick(0, 0), pick(1, 0), pick(0, 1), pick(1, 1),
-        F.any_value(F.col("width"), True).alias("width"),
-        F.any_value(F.col("height"), True).alias("height"),
+        F.min("width").alias("width"), F.max("width").alias("w_max"),
+        F.min("height").alias("height"), F.max("height").alias("h_max"),
     )
 
+    src = {f.name: f.dataType for f in tiles.schema.fields}
     out_schema = T.StructType([
-        T.StructField("zoom", T.LongType()),
+        T.StructField("zoom", src["zoom"]),
         T.StructField("tile_x", T.LongType()),
         T.StructField("tile_y", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
+        T.StructField("width", src["width"]),
+        T.StructField("height", src["height"]),
         T.StructField("cells", T.ArrayType(T.DoubleType())),
     ])
+    arrow_schema = to_arrow_schema(out_schema)
 
     def asm_kernel(batches):
         for b in batches:
             nrow = b.num_rows
             if not nrow:
                 continue
-            w = b.column("width")[0].as_py()
-            h = b.column("height")[0].as_py()
+            w, h = _tile_size(
+                pa.concat_arrays([b.column("width"), b.column("w_max")]),
+                pa.concat_arrays([b.column("height"), b.column("h_max")]))
             h2, w2 = h // 2, w // 2
             out = np.empty((nrow, h, w), dtype=np.float64)
-            missing = np.full((h2, w2), fill, dtype=np.float64)
             views = {"00": (slice(None, h2), slice(None, w2)),
                      "10": (slice(None, h2), slice(w2, None)),
                      "01": (slice(h2, None), slice(None, w2)),
                      "11": (slice(h2, None), slice(w2, None))}
             for k, (rs, cs) in views.items():
-                mask, offs, vals = _list_rows(b.column(f"q_{k}"))
-                for i in range(nrow):
-                    out[i, rs, cs] = (missing if mask[i] else
-                                      vals[offs[i]:offs[i + 1]]
-                                      .reshape(h2, w2))
+                valid, q = _list_rows(b.column(f"q_{k}"), h2 * w2)
+                out[~valid, rs, cs] = fill
+                out[valid, rs, cs] = q.reshape(-1, h2, w2)
+            cols = [b.column("zoom"), b.column("tile_x"), b.column("tile_y"),
+                    pa.array(np.full(nrow, w)), pa.array(np.full(nrow, h)),
+                    _list_col(out.reshape(nrow, -1), limit)]
             yield pa.record_batch(
-                [b.column("zoom"), b.column("tile_x"), b.column("tile_y"),
-                 pa.array(np.full(nrow, w, np.int32)),
-                 pa.array(np.full(nrow, h, np.int32)),
-                 _list_col(out.reshape(nrow, -1))],
-                names=["zoom", "tile_x", "tile_y",
-                       "width", "height", "cells"])
+                [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
 
-    out = per_parent.mapInArrow(asm_kernel, out_schema)
-    # column order + types exactly as the SQL form produces them
-    return out.select(
-        *(F.col(f.name).cast(f.dataType) for f in sql_schema.fields))
+    return per_parent.mapInArrow(asm_kernel, out_schema)
 
 
-def _pyramid_up_sql(tiles: DataFrame, agg: str, fill: float) -> DataFrame:
-    ops = {
-        "sum": lambda a, b, c, d: f"{a} + {b} + {c} + {d}",
-        "mean": lambda a, b, c, d: f"({a} + {b} + {c} + {d}) / 4.0",
-        "max": lambda a, b, c, d: f"greatest({a}, {b}, {c}, {d})",
-    }
-    if agg not in ops:
-        raise ValueError(f"agg must be one of {sorted(ops)}")
+def _tile_size(widths, heights) -> tuple[int, int]:
+    """The one even (width, height) every row of an Arrow batch shares.
+    The kernels reshape whole batches, so a NULL, mixed (4×4 next to
+    2×8) or odd size raises instead of scrambling cells."""
+    if widths.null_count or heights.null_count:
+        raise ValueError("pyramid_up: NULL width/height")
+    w, h = np.asarray(widths), np.asarray(heights)
+    if (w != w[0]).any() or (h != h[0]).any():
+        sizes = sorted(set(zip(w.tolist(), h.tolist())))
+        raise ValueError(
+            f"pyramid_up requires one width/height for all tiles, got {sizes}")
+    if w[0] % 2 or h[0] % 2:
+        raise ValueError("pyramid_up requires even tile size")
+    return int(w[0]), int(h[0])
 
-    # step 1: child tile -> (parent key, quadrant position, q*q cells)
-    # quadrant pixel (r, c) aggregates child pixels (2r, 2c)..(2r+1, 2c+1)
-    def child(dr: int, dc: int) -> str:
-        return (
-            f"element_at(cells, CAST((i DIV (width DIV 2)) * 2 * width"
-            f" + ({dr}) * width"
-            f" + (i % (width DIV 2)) * 2 + ({dc}) + 1 AS INT))"
-        )
 
-    quad = (
-        f"transform(sequence(0, (width DIV 2) * (height DIV 2) - 1), "
-        f"i -> {ops[agg](child(0, 0), child(0, 1), child(1, 0), child(1, 1))})"
-    )
-    # floor-division parent keys + pmod quadrant positions so NEGATIVE
-    # tile coordinates (custom-CRS layouts) map correctly — plain DIV/%
-    # truncate toward zero and would route tile -1 to parent 0 with a
-    # quadrant of -1 that matches no pivot column (silent data loss)
-    guard = (
-        "CASE WHEN width % 2 = 0 AND height % 2 = 0 THEN "
-        f"{quad} ELSE raise_error('pyramid_up requires even tile size') END"
-    )
-    quads = tiles.selectExpr(
-        "zoom - 1 AS zoom",
-        "(tile_x - pmod(tile_x, 2)) DIV 2 AS tile_x",
-        "(tile_y - pmod(tile_y, 2)) DIV 2 AS tile_y",
-        "CAST(pmod(tile_x, 2) AS INT) AS qx",
-        "CAST(pmod(tile_y, 2) AS INT) AS qy",
-        "width",
-        "height",
-        f"{guard} AS qcells",
-    )
+def _list_rows(col, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(valid, values) of an Arrow list<double> column: ``valid`` flags
+    the non-NULL rows, ``values`` is their (valid.sum(), k) float64
+    block. Read through the offsets from the raw buffers, so NaN elements
+    stay NaN (a pandas round-trip would turn them into nulls). Raises
+    unless every non-NULL row holds exactly k values."""
+    valid = ~np.asarray(col.is_null())
+    offs = np.asarray(col.offsets, dtype=np.int64)
+    starts = offs[:-1][valid]
+    if (offs[1:][valid] - starts != k).any():
+        raise ValueError(f"pyramid_up: every cells row must hold width*height = {k} values")
+    vals = np.asarray(col.values, dtype=np.float64)
+    if offs[-1] - offs[0] == len(starts) * k:  # NULL rows empty: one block
+        return valid, vals[offs[0]:offs[-1]].reshape(-1, k)
+    return valid, np.array([vals[s:s + k] for s in starts],
+                           dtype=np.float64).reshape(-1, k)
 
-    # step 2: pivot quadrants to columns, assemble rows west++east
-    def pick(qx: int, qy: int) -> F.Column:
-        return F.any_value(
-            F.when((F.col("qx") == qx) & (F.col("qy") == qy), F.col("qcells")),
-            True,
-        ).alias(f"q_{qx}{qy}")
 
-    per_parent = quads.groupBy("zoom", "tile_x", "tile_y").agg(
-        pick(0, 0), pick(1, 0), pick(0, 1), pick(1, 1),
-        F.any_value(F.col("width"), True).alias("width"),
-        F.any_value(F.col("height"), True).alias("height"),
-    )
-    nd = f"CAST({fill!r} AS DOUBLE)" if fill == fill else "CAST('NaN' AS DOUBLE)"
-    g = {
-        k: f"coalesce(q_{k}, array_repeat({nd}, CAST((width DIV 2) * (height DIV 2) AS INT)))"
-        for k in ("00", "10", "01", "11")
-    }
-    half = "CAST(width DIV 2 AS INT)"
-    rows = (
-        f"flatten(transform(sequence(0, height DIV 2 - 1), r -> concat("
-        f"slice({g['00']}, CAST(r AS INT) * {half} + 1, {half}), "
-        f"slice({g['10']}, CAST(r AS INT) * {half} + 1, {half}))))"
-    )
-    rows_s = (
-        f"flatten(transform(sequence(0, height DIV 2 - 1), r -> concat("
-        f"slice({g['01']}, CAST(r AS INT) * {half} + 1, {half}), "
-        f"slice({g['11']}, CAST(r AS INT) * {half} + 1, {half}))))"
-    )
-    return per_parent.selectExpr(
-        "zoom", "tile_x", "tile_y", "width", "height",
-        f"concat({rows}, {rows_s}) AS cells",
-    )
+def _list_col(arr2d: np.ndarray, limit: int):
+    """numpy (n, k) float64 -> Arrow list<double> rows, NaN-preserving.
+    The offsets are computed in int64 and must fit the list type's int32."""
+    import pyarrow as pa
+
+    n, k = arr2d.shape
+    if n * k > limit:
+        raise ValueError(
+            f"pyramid_up: a batch of {n} tiles x {k} cells exceeds the "
+            f"{limit}-value Arrow list limit; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    offsets = np.arange(n + 1, dtype=np.int64) * k
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)),
+        pa.array(arr2d.reshape(-1), type=pa.float64()))
 
 
 def write_pyramid(

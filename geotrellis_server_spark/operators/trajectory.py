@@ -116,6 +116,34 @@ def _dda_coord_sql(c0: str, c1: str, n: str, t: str) -> str:
             f"CAST(floor({num} / (2.0 * ({n}))) AS BIGINT) END")
 
 
+def _hops(events: DataFrame, zoom: int, tile_size: int, user_col: str,
+          ts_col: str, id_col: str, lon: str, lat: str) -> DataFrame:
+    """Consecutive event pairs per user in (ts, id) order as global pixel
+    runs: (x0, y0, x1, y1) at ``zoom`` — one user-keyed window exchange."""
+    from pyspark.sql import Window
+
+    from .density import global_pixel_sql
+
+    gpx, gpy = global_pixel_sql(lon, lat, zoom, tile_size)
+    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    pts = events.select(
+        F.col(user_col),
+        F.col(ts_col),
+        F.col(id_col),
+        F.expr(gpx).alias("x1"),
+        F.expr(gpy).alias("y1"),
+    )
+    return (
+        pts.select(
+            "x1", "y1",
+            F.lag("x1").over(w).alias("x0"),
+            F.lag("y1").over(w).alias("y0"),
+        )
+        .where("x0 IS NOT NULL")
+        .select("x0", "y0", "x1", "y1")
+    )
+
+
 def rasterize_hops(
     events: DataFrame,
     zoom: int,
@@ -125,7 +153,6 @@ def rasterize_hops(
     id_col: str = "event_id",
     lon: str = "lon",
     lat: str = "lat",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Linestring rasterization of per-user trajectories (GeoTrellis
     rasterizes LineStrings cell-per-major-axis-step — Rasterizer
@@ -135,50 +162,19 @@ def rasterize_hops(
     ``zoom``; output (px, py, n_traversals) counts line cells, exactly.
 
     Why DDA and not Bresenham: the rounded-DDA cell at step t is a
-    CLOSED-FORM exact-integer expression (one row-local explode of
-    sequence(0, n) — whole-stage codegen, no recurrence), while
+    CLOSED-FORM exact-integer expression (``_dda_coord_sql``, which the
+    oracle and the tests' explode-based witness evaluate per step), while
     Bresenham's error accumulator is inherently sequential. Same
     one-cell-per-major-step contract.
 
     Scale shape: hop building is one user-keyed window exchange (free
-    when the log is stored partitioned by user); the explode is
-    row-local and bounded by the grid diameter; the count is ONE
+    when the log is stored partitioned by user); the numpy kernel below
+    walks each hop's steps in Arrow batches; the count is ONE
     map-side-combined aggregate on the pixel key — hot corridors
     collapse in partials."""
-    from .density import global_pixel_sql
+    hops = _hops(events, zoom, tile_size, user_col, ts_col, id_col, lon, lat)
 
-    gpx, gpy = global_pixel_sql(lon, lat, zoom, tile_size)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    pts = events.select(
-        F.col(user_col),
-        F.col(ts_col),
-        F.col(id_col),
-        F.expr(gpx).alias("x1"),
-        F.expr(gpy).alias("y1"),
-    )
-    hops = (
-        pts.select(
-            "x1", "y1",
-            F.lag("x1").over(w).alias("x0"),
-            F.lag("y1").over(w).alias("y0"),
-        )
-        .where("x0 IS NOT NULL")
-        .withColumn("n", F.expr("greatest(abs(x1 - x0), abs(y1 - y0))"))
-    )
-    if impl == "sql":
-        px = _dda_coord_sql("x0", "x1", "n", "t")
-        py = _dda_coord_sql("y0", "y1", "n", "t")
-        return (
-            hops.select("x0", "y0", "x1", "y1", "n",
-                        F.expr("explode(sequence(0, n))").alias("t"))
-            .select(F.expr(px).alias("px"), F.expr(py).alias("py"))
-            .groupBy("px", "py")
-            .agg(F.count("*").alias("n_traversals"))
-        )
-
-    # Arrow kernel (default): the explode+CASE path evaluates ~85 ns/cell
+    # numpy DDA kernel: the explode+CASE form evaluates ~85 ns/cell
     # in codegen (measured: 331M cells = 31 s at sf0.1×40); the numpy DDA
     # accumulates ONE dense counts array per TASK across all its Arrow
     # batches and emits the nonzeros once at iterator exhaustion, so the
@@ -252,8 +248,7 @@ def rasterize_hops(
             yield pd.DataFrame({"px": uk // n_px, "py": uk % n_px,
                                 "partial": uc})
 
-    return (hops.select("x0", "y0", "x1", "y1")
-            .mapInPandas(kernel, schema)
+    return (hops.mapInPandas(kernel, schema)
             .groupBy("px", "py")
             .agg(F.sum("partial").alias("n_traversals")))
 

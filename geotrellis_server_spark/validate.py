@@ -5,6 +5,8 @@ raise once with the full list."""
 
 from __future__ import annotations
 
+import numbers
+
 
 class RequestValidationError(ValueError):
     def __init__(self, errors: list[str]):
@@ -60,17 +62,19 @@ def validate_get_tile(z, x, y, max_zoom: int = 30, scheme=None) -> None:
 
 
 def validate_knn(k, queries) -> None:
+    """kNN request: ``k`` a positive int, each query an (id, lon, lat)
+    triple with numeric lon in [-180, 180] and lat in [-90, 90]."""
     errs = []
-    if not isinstance(k, int) or k <= 0:
+    if isinstance(k, bool) or not isinstance(k, numbers.Integral) or k <= 0:
         errs.append(f"k must be a positive int, got {k!r}")
     for q in queries:
-        if len(q) != 3:
+        if not isinstance(q, (tuple, list)) or len(q) != 3:
             errs.append(f"query must be (id, lon, lat), got {q!r}")
             continue
         _, lon, lat = q
-        if not (-180.0 <= lon <= 180.0):
-            errs.append(f"query lon {lon} out of range")
-        if not (-90.0 <= lat <= 90.0):
-            errs.append(f"query lat {lat} out of range")
+        if not isinstance(lon, numbers.Real) or not -180.0 <= lon <= 180.0:
+            errs.append(f"query lon {lon!r} out of [-180, 180]")
+        if not isinstance(lat, numbers.Real) or not -90.0 <= lat <= 90.0:
+            errs.append(f"query lat {lat!r} out of [-90, 90]")
     if errs:
         raise RequestValidationError(errs)

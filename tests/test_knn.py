@@ -1,7 +1,10 @@
 """kNN ring expansion vs brute force — exactness incl. forced expansion."""
 
+import pytest
+
 from geotrellis_server_spark.operators import knn
 from geotrellis_server_spark.sources import synth
+from geotrellis_server_spark.validate import RequestValidationError
 
 N = 2500
 
@@ -98,3 +101,18 @@ def test_auto_res_density_rule():
     assert auto_res(60_000) == 4
     assert auto_res(1_000_000_000) == 11  # deepens with the corpus
     assert 2 <= auto_res(1) <= 12
+
+
+def test_knn_join_rejects_bad_requests(spark):
+    """k, query shape and lon/lat range are checked before any Spark job,
+    and every problem is reported at once."""
+    d = synth.extract_geometry(synth.docs(spark, 30))
+    with pytest.raises(RequestValidationError, match="k must be a positive int"):
+        knn.knn_join(d, [(0, 0.0, 0.0)], k=0)
+    with pytest.raises(RequestValidationError, match=r"query must be \(id, lon, lat\)"):
+        knn.knn_join(d, [(0, 0.0)], k=3)
+    with pytest.raises(RequestValidationError, match="lon 200.0 out of"):
+        knn.knn_join(d, [(0, 200.0, 0.0)], k=3)
+    with pytest.raises(RequestValidationError) as err:
+        knn.knn_join(d, [(0, 200.0, 0.0), (1, 0.0, -91.0), "q"], k=2.5)
+    assert len(err.value.errors) == 4

@@ -172,6 +172,24 @@ def test_focal_mean_with_halo(spark):
     assert np.allclose(got, exp, equal_nan=True)
 
 
+def test_with_halo_raw_strips(spark):
+    """with_halo returns the body plus the neighbors' radius-wide strips,
+    NULL where no neighbor exists; eval_focal pads from these."""
+    from geotrellis_server_spark.operators.focal import STRIP_COLS, with_halo
+
+    tiles = tile_df(spark, "d", range(0, 16), key=(1, 0, 0)).union(
+        tile_df(spark, "d", range(16, 32), key=(1, 1, 0)))
+    rows = {r.tile_x: r for r in with_halo(tiles, 1).collect()}
+    west, east = rows[0], rows[1]
+    assert list(west.s_c) == [float(v) for v in range(16)]
+    assert list(west.s_e) == [16.0, 20.0, 24.0, 28.0]  # neighbor's west column
+    assert list(east.s_w) == [3.0, 7.0, 11.0, 15.0]    # neighbor's east column
+    assert all(getattr(west, s) is None for s in STRIP_COLS if s != "s_e")
+    assert all(getattr(east, s) is None for s in STRIP_COLS if s != "s_w")
+    with pytest.raises(ValueError, match="radius >= 1"):
+        with_halo(tiles, 0)
+
+
 def test_focal_skipped_for_local_expr(spark):
     # local expressions must not pay the halo shuffle
     red = tile_df(spark, "red", range(1, 17))

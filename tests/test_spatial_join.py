@@ -268,9 +268,11 @@ def test_simplify_trajectories_tolerance_and_invariance(spark):
 
 
 def test_rasterize_hops_arrow_equals_sql(spark):
-    """The Arrow DDA kernel and the pure-SQL explode path are
+    """The Arrow DDA kernel and the pure-SQL explode witness are
     bit-identical (same int64 floor arithmetic)."""
     from datetime import datetime, timedelta
+
+    from witnesses import rasterize_hops_sql
 
     from geotrellis_server_spark.operators.trajectory import rasterize_hops
 
@@ -280,6 +282,9 @@ def test_rasterize_hops_arrow_equals_sql(spark):
             for k in range(300)]
     ev = spark.createDataFrame(
         rows, "event_id long, user_id long, ts timestamp, lon double, lat double")
-    a = sorted(map(tuple, rasterize_hops(ev, 2, 64, impl="arrow").collect()))
-    b = sorted(map(tuple, rasterize_hops(ev, 2, 64, impl="sql").collect()))
+    up, sql = rasterize_hops(ev, 2, 64), rasterize_hops_sql(ev, 2, 64)
+    assert [(f.name, f.dataType) for f in up.schema] == \
+           [(f.name, f.dataType) for f in sql.schema]
+    a = sorted(map(tuple, up.collect()))
+    b = sorted(map(tuple, sql.collect()))
     assert a == b and len(a) > 100

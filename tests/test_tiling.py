@@ -127,21 +127,28 @@ def test_pyramid_up_plan_shapes(spark):
         [(3, 0, 0, 4, 4, [0.0] * 16)],
         "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
     )
-    # sql impl: pure JVM, no Python nodes
-    plan = pyramid_up(df, impl="sql")._jdf.queryExecution().executedPlan().toString()
+    plan = pyramid_up(df)._jdf.queryExecution().executedPlan().toString()
+    # downsample kernel, ONE shuffle on the parent key, assembly kernel;
+    # Arrow-batched only, never row-at-a-time or pandas_udf Python
+    assert plan.count("MapInArrow") == 2, plan
+    assert plan.count("Exchange") == 1, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "MapInArrow" not in plan
-    # arrow impl (default): Arrow-batched kernels, never row-at-a-time
-    plan_a = pyramid_up(df)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan_a
-    assert "BatchEvalPython" not in plan_a
+
+
+def _tiles_df(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
+    )
 
 
 def test_pyramid_up_arrow_equals_sql(spark):
-    """The Arrow kernels must be bit-identical to the SQL form on all
+    """The Arrow kernels must be bit-identical to the SQL witness on all
     aggs, including missing quadrants, NaN fill, and negative tile
     coordinates (the FP accumulation order is the same by design)."""
     import random
+
+    from witnesses import pyramid_up_sql
 
     from geotrellis_server_spark.operators.tiling import pyramid_up
 
@@ -153,22 +160,102 @@ def test_pyramid_up_arrow_equals_sql(spark):
                 continue  # leave holes -> missing quadrants
             rows.append((5, tx, ty, 8, 8,
                          [rng.uniform(-100, 100) for _ in range(64)]))
-    df = spark.createDataFrame(
-        rows,
-        "zoom INT, tile_x BIGINT, tile_y BIGINT, width INT, height INT, cells ARRAY<DOUBLE>",
-    )
+    df = _tiles_df(spark, rows)
     for agg, fill in (("sum", 0.0), ("mean", float("nan")), ("max", 0.0)):
+        up = pyramid_up(df, agg=agg, fill=fill)
+        sql = pyramid_up_sql(df, agg=agg, fill=fill)
+        assert up.schema == sql.schema, agg
         a = {(r.zoom, r.tile_x, r.tile_y):
-             (r.width, r.height, tuple(r.cells))
-             for r in pyramid_up(df, agg=agg, fill=fill,
-                                 impl="arrow").collect()}
+             (r.width, r.height, tuple(r.cells)) for r in up.collect()}
         b = {(r.zoom, r.tile_x, r.tile_y):
-             (r.width, r.height, tuple(r.cells))
-             for r in pyramid_up(df, agg=agg, fill=fill,
-                                 impl="sql").collect()}
+             (r.width, r.height, tuple(r.cells)) for r in sql.collect()}
         # NaN != NaN: compare via repr which preserves bit-level doubles
         assert {k: repr(v) for k, v in a.items()} == \
                {k: repr(v) for k, v in b.items()}, agg
+
+
+@pytest.mark.parametrize("types", ["INT", "BIGINT"])
+def test_pyramid_up_schema_from_input(spark, monkeypatch, types):
+    """The output schema comes from the input alone — no SQL form is
+    planned for it: zoom/width/height keep their input type, the keys
+    are bigint."""
+    from witnesses import pyramid_up_sql
+
+    monkeypatch.delattr(tiling, "_pyramid_up_sql", raising=False)
+    df = spark.createDataFrame(
+        [(3, 0, 0, 4, 4, [1.0] * 16), (3, 1, 1, 4, 4, [2.0] * 16)],
+        f"zoom {types}, tile_x BIGINT, tile_y BIGINT, width {types}, "
+        f"height {types}, cells ARRAY<DOUBLE>",
+    )
+    up = tiling.pyramid_up(df)
+    assert up.schema.simpleString() == (
+        f"struct<zoom:{types.lower()},tile_x:bigint,tile_y:bigint,"
+        f"width:{types.lower()},height:{types.lower()},cells:array<double>>")
+    assert up.schema == pyramid_up_sql(df).schema
+    (r,) = up.collect()
+    assert (r.zoom, r.tile_x, r.tile_y, r.width, r.height) == (2, 0, 0, 4, 4)
+    assert sum(r.cells) == 16 * 1.0 + 16 * 2.0
+
+
+@pytest.mark.parametrize("rows_per_batch", [4096, 1])
+def test_pyramid_up_rejects_mixed_tile_sizes(spark, rows_per_batch):
+    """4×4 and 2×8 tiles hold the same cell count, so a whole-batch
+    reshape would scramble them silently. In one Arrow batch the
+    downsample kernel rejects the mix; one row per batch leaves it to
+    the assembly kernel, which sees both children of the parent."""
+    df = _tiles_df(spark, [(3, 0, 0, 4, 4, [1.0] * 16),
+                           (3, 1, 1, 2, 8, [2.0] * 16)]).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(rows_per_batch))
+    try:
+        with pytest.raises(Exception, match="one width/height for all tiles"):
+            tiling.pyramid_up(df).collect()
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("second, match", [
+    ((3, 1, 0, 3, 3, [1.0] * 9), "one width/height for all tiles"),
+    ((3, 1, 0, 4, 4, None), "NULL cells row"),
+], ids=["odd_size", "null_cells"])
+def test_pyramid_up_rejects_bad_row_after_first(spark, second, match):
+    """Row 0 of the batch is a valid 4×4 tile; the rows after it are
+    checked too."""
+    df = _tiles_df(spark, [(3, 0, 0, 4, 4, [1.0] * 16), second]).coalesce(1)
+    with pytest.raises(Exception, match=match):
+        tiling.pyramid_up(df).collect()
+
+
+def test_pyramid_up_list_offset_guard(spark, monkeypatch):
+    """Output list offsets are int32: a batch whose cells would pass the
+    limit raises instead of wrapping. The limit (2^31 - 1 in production)
+    is shrunk so a 4×4 parent (16 values) sits on either side of it."""
+    df = _tiles_df(spark, [(3, 0, 0, 4, 4, [1.0] * 16)])
+    monkeypatch.setattr(tiling, "_MAX_LIST_VALUES", 16)
+    (r,) = tiling.pyramid_up(df).collect()
+    assert sum(r.cells) == 16.0
+    monkeypatch.setattr(tiling, "_MAX_LIST_VALUES", 15)
+    with pytest.raises(Exception, match="Arrow list limit"):
+        tiling.pyramid_up(df).collect()
+
+
+def test_list_rows_reads_through_offsets():
+    """Arrow lets a NULL list row own a non-empty child segment and a
+    sliced column start mid-buffer; rows must come from the offsets."""
+    import pyarrow as pa
+
+    col = pa.ListArray.from_arrays(
+        pa.array([0, 2, 4, 6, 8], type=pa.int32()),
+        pa.array([0.0, 1.0, 9.0, 9.0, 4.0, float("nan"), 6.0, 7.0]),
+        mask=pa.array([False, True, False, False]))
+    valid, vals = tiling._list_rows(col, 2)
+    assert valid.tolist() == [True, False, True, True]
+    assert repr(vals.tolist()) == repr([[0.0, 1.0], [4.0, float("nan")], [6.0, 7.0]])
+    valid, vals = tiling._list_rows(col.slice(2), 2)
+    assert valid.tolist() == [True, True] and vals.tolist()[1] == [6.0, 7.0]
+    with pytest.raises(ValueError, match="hold width\\*height = 3 values"):
+        tiling._list_rows(col, 3)
 
 
 def test_pyramid_up_negative_tile_coords(spark):
